@@ -172,7 +172,7 @@ def streaming(workload, raw, sched):
     }
 
 
-def queries(workload, cfg, raw):
+def queries(cfg, raw):
     fam = {q: f for f, qs in cfg.get("families", {}).items() for q in qs}
     by = {}
     for o in raw["ops"]:
@@ -233,7 +233,7 @@ def per_layer(workload, cfg, raw, sched):
     for k, v in raw.get("operators_s", {}).items():
         out[f"operators.{k}_s"] = v
     out.update(streaming(workload, raw, sched))
-    out.update(queries(workload, cfg, raw))
+    out.update(queries(cfg, raw))
     out["trace.overhead_ms"], out["trace.overhead_share"] = overhead(workload, raw)
     out["trace.spans"] = len(raw["spans"])
     return {k: {"value": float(out[k]), "unit": PER_LAYER[k]} for k in PER_LAYER}

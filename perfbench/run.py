@@ -146,8 +146,9 @@ def build():
     os.makedirs(classes)
     srcs = sorted(glob.glob(os.path.join(HERE, "src", "**", "*.scala"), recursive=True))
     with open(blog, "a") as fh:
-        rc = spawn(["java", "-Xmx1g", "-cp", os.pathsep.join(compiler), "scala.tools.nsc.Main",
-                    "-nowarn", "-d", classes, "-classpath", classpath] + srcs,
+        rc = spawn(["java", "-Xmx1g", "-XX:-UsePerfData", "-cp", os.pathsep.join(compiler),
+                    "scala.tools.nsc.Main", "-nowarn", "-d", classes, "-classpath", classpath]
+                   + srcs,
                    max(30, remaining() - 40), stdout=fh, stderr=subprocess.STDOUT)
     if rc != 0:
         with open(blog) as fh:
@@ -416,15 +417,24 @@ def main():
     extra, sched = make_inputs(args.workload, cfg, args.seed, args.seconds, data,
                                  workloads["curation"])
     shutil.rmtree(out, ignore_errors=True)
+    shutil.rmtree(os.path.join(run_dir, "tmp"), ignore_errors=True)
     cores = len(os.sched_getaffinity(0))
-    cmd = (["java", "-Xms2g", "-Xmx2g"] + java_opts + ["-cp", classpath, "perfbench.Main",
+    # keep the JVM's temporary files inside the checkout: no perf-data file,
+    # temp files under the run directory, and Spark's local dirs from its
+    # own setting rather than an inherited SPARK_LOCAL_DIRS
+    tmp = os.path.join(run_dir, "tmp")
+    os.makedirs(tmp, exist_ok=True)
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_LOCAL_DIRS"}
+    cmd = (["java", "-Xms2g", "-Xmx2g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}"]
+           + java_opts + ["-cp", classpath, "perfbench.Main",
            "--workload", args.workload, "--seed", str(args.seed),
            "--seconds", str(args.seconds), "--trace", str(args.trace),
            "--data", data, "--out", out, "--cores", str(cores)] + extra)
     log(f"running {args.workload} on local[{cores}] for {args.seconds:g} s")
     steal0 = cpu_steal()
     with open(os.path.join(run_dir, "jvm.log"), "w") as jlog:
-        rc = spawn(cmd, max(10, remaining() - 15), stdout=jlog, stderr=subprocess.STDOUT)
+        rc = spawn(cmd, max(10, remaining() - 15), stdout=jlog, stderr=subprocess.STDOUT,
+                   env=env)
     if rc != 0 or not os.path.exists(os.path.join(out, "raw.json")):
         with open(os.path.join(run_dir, "jvm.log")) as fh:
             sys.stderr.write(fh.read()[-3000:])
