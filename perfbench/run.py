@@ -34,7 +34,10 @@ import metrics as M  # noqa: E402
 
 ROOT = os.getcwd()
 BUILD = os.path.join(ROOT, ".bench_build", "perfbench")
+# a run must end within 180 s; the build before the first run of a
+# checkout has its own, longer allowance
 DEADLINE_S = 175.0
+BUILD_S = {"sbt": 600, "scalac": 200}
 T_START = time.monotonic()
 
 END_TO_END = ("setup_s", "latency_p50_ms", "latency_tail_ms", "throughput_per_s",
@@ -122,7 +125,7 @@ def build():
     os.makedirs(BUILD, exist_ok=True)
     with open(blog, "w") as fh:
         rc = spawn(["sbt", "--batch", "-Dsbt.log.noformat=true", "export Runtime/fullClasspath",
-                    "show javaOptions"], max(30, remaining() - 60),
+                    "show javaOptions"], BUILD_S["sbt"],
                    stdout=fh, stderr=subprocess.STDOUT, env=sbt_env())
     with open(blog) as fh:
         text = fh.read()
@@ -149,7 +152,7 @@ def build():
         rc = spawn(["java", "-Xmx1g", "-XX:-UsePerfData", "-cp", os.pathsep.join(compiler),
                     "scala.tools.nsc.Main", "-nowarn", "-d", classes, "-classpath", classpath]
                    + srcs,
-                   max(30, remaining() - 40), stdout=fh, stderr=subprocess.STDOUT)
+                   BUILD_S["scalac"], stdout=fh, stderr=subprocess.STDOUT)
     if rc != 0:
         with open(blog) as fh:
             sys.stderr.write(fh.read()[-4000:])
@@ -410,7 +413,9 @@ def main():
     if not shutil.which("sbt") or not shutil.which("java"):
         fail("sbt and java must be on PATH")
 
+    global T_START
     classpath, java_opts = build()
+    T_START = time.monotonic()
     run_dir = os.path.join(BUILD, "run", args.workload)
     data = os.path.join(run_dir, "data")
     out = os.path.join(run_dir, "out")
