@@ -55,6 +55,13 @@ def self_time(span, children):
     return (e - s) - union_length(children, s, e)
 
 
+def covered_share(span, children):
+    """Share of a span's duration that its children cover (1.0 for an
+    empty span); the rest is time no child explains."""
+    s, e = span
+    return union_length(children, s, e) / (e - s) if e > s else 1.0
+
+
 def event_latencies(due_ms, chunks, batches, t0_ms):
     """Open-loop accounting for a fed stream.
 

@@ -159,18 +159,25 @@ class JobListener extends SparkListener {
   * `spark.sql.queryExecutionListeners`, so sessions the engine clones for
   * its plan scopes load it too. Callbacks arrive on the listener bus, not
   * the calling thread, so every plan span of a traced run is kept and tied
-  * to its operation by time. */
+  * to its operation by time. Each phase's own interval is kept too
+  * (`<phase>_t0`, `<phase>_t1`), so the driver time a plan explains is the
+  * union of its phases, not the gaps between them. */
 class PlanListener extends QueryExecutionListener {
   import Trace._
+  private val phases = Seq("analysis" -> "analysis", "optimization" -> "optimization",
+    "planning" -> "physical")
   private def record(funcName: String, qe: QueryExecution, failed: Boolean): Unit = {
     val ph = qe.tracker.phases
-    def d(k: String) = ph.get(k).map(_.durationMs.toDouble).getOrElse(0.0)
     val starts = ph.values.map(_.startTimeMs)
     val ends = ph.values.map(_.endTimeMs)
     val (t0, t1) = if (starts.isEmpty) (0.0, 0.0) else (starts.min.toDouble, ends.max.toDouble)
+    val times = phases.flatMap { case (k, n) =>
+      val p = ph.get(k)
+      Seq(s"${n}_ms" -> p.map(_.durationMs.toDouble).getOrElse(0.0)) ++
+        p.toSeq.flatMap(x => Seq(s"${n}_t0" -> x.startTimeMs.toDouble, s"${n}_t1" -> x.endTimeMs.toDouble))
+    }
     spans.add(Span(newId(), 0, "", "plan", funcName, t0, t1,
-      Map("analysis_ms" -> d("analysis"), "optimization_ms" -> d("optimization"),
-        "physical_ms" -> d("planning"), "failed" -> (if (failed) 1.0 else 0.0))))
+      times.toMap + ("failed" -> (if (failed) 1.0 else 0.0))))
   }
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
     record(funcName, qe, failed = false)

@@ -49,6 +49,49 @@ class SelfTime(unittest.TestCase):
         self.assertEqual(M.self_time((5, 9), [(0, 20)]), 0)
         self.assertEqual(M.self_time((5, 9), [(10, 12)]), 4)
 
+    def test_covered_share_leaves_unexplained_time_out(self):
+        # an op of 10 ms: plan phases [0,1] and [1,2], one job [4,8]; the
+        # gaps [2,4] and [8,10] are driver time nothing explains
+        self.assertAlmostEqual(M.covered_share((0, 10), [(0, 1), (1, 2), (4, 8)]), 0.6)
+        self.assertEqual(M.covered_share((0, 10), [(-5, 20)]), 1.0)
+        self.assertEqual(M.covered_share((0, 10), []), 0.0)
+        self.assertEqual(M.covered_share((3, 3), []), 1.0)
+
+
+class PlanAndJobCover(unittest.TestCase):
+    def test_driver_time_no_span_explains_lowers_the_share(self):
+        import layers
+        op = {"kind": "op", "op": "q#1", "name": "q", "start": 0.0, "end": 100.0,
+              "attrs": {"traced": 1.0}}
+        # analysis [0,10] and optimization/physical [30,40], one job [50,80]:
+        # 50 of the op's 100 ms are covered
+        plan = {"kind": "plan", "op": "", "name": "collect", "start": 0.0, "end": 40.0,
+                "attrs": {"analysis_ms": 10.0, "analysis_t0": 0.0, "analysis_t1": 10.0,
+                          "optimization_ms": 5.0, "optimization_t0": 30.0,
+                          "optimization_t1": 35.0, "physical_ms": 5.0,
+                          "physical_t0": 35.0, "physical_t1": 40.0}}
+        job = {"kind": "job", "op": "q#1", "name": "job-0", "start": 50.0, "end": 80.0,
+               "attrs": {}}
+        raw = {"spans": [op, plan, job], "probes": [{"ms": 1.0}], "cores": 4,
+               "ops": [{"name": "q#1", "phase": "measure", "start": 0.0, "end": 100.0,
+                        "ok": True, "blocks_left": 0}]}
+        out = layers.per_layer("query_mix", {"families": {"reference": ["q"]}}, raw, None)
+        self.assertAlmostEqual(out["planning.accounted_share_min"]["value"], 0.5)
+        self.assertEqual(out["planning.driver_outside_jobs_ms"]["value"], 70.0)
+        self.assertEqual(out["planning.unexplained_driver_ms"]["value"], 50.0)
+        self.assertEqual(out["planning.analysis_ms"]["value"], 10.0)
+        self.assertEqual(set(out), set(layers.PER_LAYER))
+
+
+class InteractionMap(unittest.TestCase):
+    def test_every_per_layer_metric_has_a_mapped_layer(self):
+        import json
+        import layers
+        here = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(here, "..", "interactions.json")) as fh:
+            mapped = json.load(fh)["layers"]
+        self.assertEqual({k.split(".")[0] for k in layers.PER_LAYER}, set(mapped))
+
 
 class Inputs(unittest.TestCase):
     def test_same_seed_same_tables(self):
