@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (lazy, UTC, small shuffle fan-out). */
+/** One shared local session per suite (lazy, UTC, small shuffle fan-out,
+  * and the engine's local checkpoint filesystem, so checkpointed streaming
+  * tests run the path sessions built by `GraftSession` run). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
 }
@@ -16,6 +18,7 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalCheckpointFsConf._1, GraftSession.LocalCheckpointFsConf._2)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
